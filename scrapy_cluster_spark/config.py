@@ -10,7 +10,7 @@ settings.py:39-40) and moderation becomes deterministic slot assignment
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -37,20 +37,15 @@ class EngineConfig:
     # Round length in seconds (== queue_window; see module docstring)
     round_len: int = 60
     # Frontier physical layout: number of domain-hash buckets.
-    # At 10^10 URLs this is the unit of partition pruning + bloom sidecars.
+    # At 10^10 URLs this is the unit of partition pruning + cuckoo sidecars.
     frontier_buckets: int = 32
     # Hot-domain salting: two-phase top-k kicks in above this backlog
     salt_partitions: int = 8
-    # Bloom sidecar pre-filter for the seen-probe (operators/bloom.py);
-    # identical semantics either way (A/B-tested), bloom cuts the
-    # anti-join's shuffle volume at frontier scale
-    use_bloom: bool = False
-    bloom_m_bits: int = 1 << 23
-    bloom_k: int = 7
-    # Cuckoo sidecar (operators/cuckoo.py) — the DELETABLE membership
-    # variant: retention removes expired fingerprints in place instead
-    # of rebuilding the sidecar.  Same exact-join fallback contract as
-    # bloom (A/B-tested e2e); at most one of use_bloom/use_cuckoo.
+    # Cuckoo sidecar pre-filter for the seen-probe (operators/cuckoo.py):
+    # deletable, so retention removes expired fingerprints in place.
+    # Identical output to the plain anti-join (A/B-tested e2e); off by
+    # default because the anti-join measured faster at 2M-6M seen rows
+    # (README "URL-seen membership").
     use_cuckoo: bool = False
     cuckoo_m: int = 1 << 16
     cuckoo_slots: int = 4
@@ -65,13 +60,6 @@ class EngineConfig:
     # (expire_snapshots): resume only needs the last lineage-committed
     # version; the margin covers a compaction landing mid-crash.
     snapshot_keep_last: int = 5
-    # Fetch-join miss recovery: False (default) anti-joins the scheduled
-    # batch against the column-pruned pages url scan — nothing
-    # html-bearing is persisted (persisting corpus-sized hits was the
-    # round-2 fetch-phase anti-scaling, operators/fetch.py docstring).
-    # True restores the persist-hits single-scan shape for deployments
-    # where the batch is tiny relative to pages.
-    fetch_persist_hits: bool = False
     # Adaptive item materialization (plans/round.py): batches at or
     # above this row count stream straight into the crawled table's
     # files (write-through — no binary in the block manager, the
@@ -86,10 +74,6 @@ class EngineConfig:
     # file-open-bound (store.py compact docstring)
     compact_every: int = 0
     compact_min_files: int = 16
-    # files per append for small state tables: None = let AQE decide
-    # (parallel write); small ints keep file counts tiny for long test
-    # crawls at the cost of a single-task serial write per append
-    append_coalesce: int | None = None
     # OPIC-style link-centrality scheduling (operators/rank_signal.py,
     # opt-in — the reference has no analog): URL PageRank over the
     # observed link graph refreshes every url_rank_every rounds

@@ -19,7 +19,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
 _DIM = 64
-_N_PLANES = 6  # 64 buckets: dense enough for recall on small corpora
 
 
 def _d(col) -> Column:
@@ -69,25 +68,6 @@ def brute_force_topk(
         .filter(F.col("rank") <= k)
         .select(id_q, id_c, "cos", "rank")
     )
-
-
-def _planes(dim: int = _DIM, n_planes: int = _N_PLANES, seed: int = 7) -> np.ndarray:
-    return np.random.RandomState(seed).normal(size=(n_planes, dim))
-
-
-_PLANES = _planes()
-
-
-@F.pandas_udf(IntegerType())
-def hyperplane_bucket_udf(vecs: pd.Series) -> pd.Series:
-    """Sign-of-projection LSH bucket id (deterministic planes)."""
-    def bucket(v):
-        if v is None:
-            return None
-        arr = np.asarray(v, dtype=np.float64)
-        signs = (_PLANES[:, : arr.shape[0]] @ arr) > 0
-        return int(signs.astype(np.uint32) @ (1 << np.arange(signs.size, dtype=np.uint32)))
-    return vecs.map(bucket)
 
 
 # Multi-table LSH for threshold near-dup pairs.  A single hash table
@@ -307,17 +287,20 @@ def neardup_pairs_blocked(
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         lm = pdf["_l"].to_numpy() == 1
         lp, rp = pdf[lm], pdf[~lm]
-        diag = rp.empty
+        # the tile key, not the row mix, says diagonal: a cross tile
+        # whose R block is empty (an n_hint above the real count leaves
+        # blocks empty) must score nothing, not L against itself
+        diag = pdf["gi"].iloc[0] == pdf["gj"].iloc[0]
         ids_l = lp["_id"].to_numpy()
+        if lp.empty or (rp.empty and not diag):
+            return pd.DataFrame({"a": ids_l[:0], "b": ids_l[:0],
+                                 "cos": np.zeros(0)})
         X = np.asarray(list(lp["_v"]), dtype=np.float64)
         if diag:
             ids_r, Y = ids_l, X
         else:
             ids_r = rp["_id"].to_numpy()
             Y = np.asarray(list(rp["_v"]), dtype=np.float64)
-        if len(X) == 0 or len(Y) == 0:
-            return pd.DataFrame({"a": ids_l[:0], "b": ids_l[:0],
-                                 "cos": np.zeros(0)})
         # cos = dot / (||x||·||y||), matching cosine()'s algebra; 4-dp
         # rounding absorbs the GEMM-vs-left-fold summation-order ulps
         nl = np.sqrt((X * X).sum(axis=1))
@@ -749,17 +732,18 @@ def pq_adc_tables(
     driver-side from a bounded collect: m × k rows per query.
 
     ``max_queries`` makes the contract ENFORCED instead of implicit
-    (round-5 verdict #4 — a caller passing 10⁶ queries used to get a
-    silent driver OOM): the collect is capped by a limit-probe and the
-    call raises before any vector leaves the executors.  The same
-    bounded-input contract as ``train_pq_codebooks``'s sample."""
-    if queries.select(id_q).limit(max_queries + 1).count() > max_queries:
+    (round-5 verdict #4 — a caller passing 10⁶ queries used to run
+    the collecting process out of memory): the collect is capped at
+    ``max_queries + 1`` rows, and the same rows both check the bound and
+    build the tables.  The same bounded-input contract as
+    ``train_pq_codebooks``'s sample."""
+    rows = queries.select(id_q, vec_q).limit(max_queries + 1).collect()
+    if len(rows) > max_queries:
         raise ValueError(
             f"pq_adc_tables: query side exceeds max_queries={max_queries}; "
             "ADC tables are per-query driver-built by contract — batch the "
             "queries or raise max_queries explicitly"
         )
-    rows = queries.select(id_q, vec_q).collect()
     m, kk, dsub = books.shape
     out = []
     for r in rows:

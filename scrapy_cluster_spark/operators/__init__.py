@@ -1,7 +1,8 @@
 """Operator layer — one module per reference operator family (SURVEY.md §2).
 
 ingest    crawl-request validation + defaults + frontier insert (§2.1/§2.2)
-dedupe    URL-seen probe (anti-join; bloom prefilter in bloom.py)   (§2.2)
+dedupe    URL-seen probe (anti-join; opt-in cuckoo prefilter)       (§2.2)
+cuckoo    deletable per-bucket membership sidecar for dedupe        (§2.2)
 limits    page-limit / blacklist / expiry / zk-domain filters       (§2.2)
 throttle  politeness quota + moderation slots                       (§2.3)
 ranking   per-domain priority top-k (two-phase, skew-salted)        (§2.3)

@@ -2,20 +2,20 @@
 membership structure.
 
 north_rule: "a bloom/cuckoo URL-seen membership structure built and
-merged per-partition via vectorized Arrow UDFs".  ``bloom.py`` is the
-OR-mergeable append-only variant; this module adds the cuckoo filter
-(Fan et al., CoNEXT'14 — public algorithm): b-slot buckets of 16-bit
-fingerprints, candidate buckets i1 = h(x) mod m and i2 = i1 XOR
-h(fp16), insert-with-eviction.  What cuckoo buys over bloom is
-DELETE — the dupefilter TTL expiry (reference EXPIREs dupefilter keys,
-redis_dupefilter.py:27; operators/retention.py is the snapshot analog)
-can remove aged fingerprints in place instead of rebuilding the
-sidecar from the retained seen rows.
+merged per-partition via vectorized Arrow UDFs".  This module is the
+engine's one such sidecar, opt-in via ``EngineConfig.use_cuckoo``: the
+cuckoo filter (Fan et al., CoNEXT'14 — public algorithm): b-slot
+buckets of 16-bit fingerprints, candidate buckets i1 = h(x) mod m and
+i2 = i1 XOR h(fp16), insert-with-eviction.  What cuckoo buys over a
+bloom filter is DELETE — the dupefilter TTL expiry (reference EXPIREs
+dupefilter keys, redis_dupefilter.py:27; operators/retention.py is the
+snapshot analog) can remove aged fingerprints in place instead of
+rebuilding the sidecar from the retained seen rows.
 
 State model: ONE filter row per domain-hash bucket, maintained across
 rounds (upsert new fps / delete expired fps via applyInPandas over
 cogrouped (filters, fps) — per-partition, never driver-side), stored
-like any other snapshot table.  Probe contract matches bloom_probe:
+like any other snapshot table.  Probe contract:
 ``maybe_seen=False`` is definite (skip the exact anti-join),
 ``maybe_seen=True`` routes to the exact join — false positives can
 never drop a row, so semantics equal the plain anti-join (A/B-tested
@@ -42,7 +42,6 @@ from pyspark.sql.types import (
     BooleanType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -195,8 +194,8 @@ def cuckoo_delete(filters: DataFrame, fps: DataFrame, **kw) -> DataFrame:
 
 
 def cuckoo_probe(candidates: DataFrame, filters: DataFrame, id_cols: list[str]) -> DataFrame:
-    """Same contract as bloom_probe: (id_cols..., bucket, fingerprint,
-    maybe_seen).  No filter for a bucket → all new; saturated filter →
+    """Cogroup candidates with their bucket's filter → (id_cols...,
+    bucket, fingerprint, maybe_seen).  No filter for a bucket → all new; saturated filter →
     all maybe_seen (degrade to exact join)."""
     out_schema = StructType(
         [candidates.schema[c] for c in id_cols]

@@ -18,12 +18,13 @@ join key.  Two mitigations, both preserving exact semantics:
      real Iceberg with bucket-partitioned tables) storage-partitioned
      joins skip the shuffle entirely — candidates for a domain only
      ever probe that domain's bucket.
-  2. a per-bucket bloom sidecar (operators/bloom.py) pre-filters
-     candidates before the exact anti-join; only bloom *hits* (possible
-     dupes) reach the join, and at crawl frontier hit-rates the join
-     input shrinks by ~the dup ratio.  Bloom misses are definitively
-     new.  (north_rule: "bloom/cuckoo membership built and merged
-     per-partition via vectorized Arrow UDFs".)
+  2. an opt-in per-bucket cuckoo sidecar (operators/cuckoo.py,
+     ``EngineConfig.use_cuckoo``) pre-filters candidates before the
+     exact anti-join; only cuckoo *hits* (possible dupes) reach the
+     join, and misses are definitively new.  (north_rule: "bloom/cuckoo
+     membership built and merged per-partition via vectorized Arrow
+     UDFs".)  Off by default: the plain anti-join measured faster at
+     2M-6M seen rows (README "URL-seen membership").
 """
 
 from __future__ import annotations
@@ -33,21 +34,8 @@ from pyspark.sql import DataFrame, functions as F
 SEEN_KEY = ["spiderid", "crawlid", "fingerprint"]
 
 
-def split_new_vs_seen(
-    candidates: DataFrame, seen: DataFrame, use_bucket: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (new, dupes) for probe-subject candidates; the caller
-    routes dont_filter rows around this."""
-    key = SEEN_KEY + (["bucket"] if use_bucket and "bucket" in seen.columns else [])
-    seen_keys = seen.select(*key)
-    new = candidates.join(seen_keys, key, "left_anti")
-    dupes = candidates.join(seen_keys, key, "left_semi")
-    return new, dupes
-
-
 def apply_dupefilter(
-    candidates: DataFrame, seen: DataFrame, blooms: DataFrame | None = None,
-    cuckoos: DataFrame | None = None,
+    candidates: DataFrame, seen: DataFrame, cuckoos: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full dupefilter pass.
 
@@ -57,25 +45,16 @@ def apply_dupefilter(
                      regardless of later page-limit/blacklist drops,
                      matching request_seen's SADD-on-probe.
 
-    With ``blooms`` (per-bucket sidecars, operators/bloom.py) the probe
-    pre-filters via the bloom pass and only bloom hits reach the exact
-    anti-join — identical output, a fraction of the shuffle.  With
-    ``cuckoos`` (operators/cuckoo.py) the same contract routes through
-    the deletable cuckoo sidecar instead; cuckoo wins when retention
-    must REMOVE expired fingerprints without a full sidecar rebuild.
+    With ``cuckoos`` (per-bucket sidecars, operators/cuckoo.py) only
+    cuckoo hits reach the exact anti-join — identical output.
     """
     probed = candidates.filter(~F.col("dont_filter"))
     bypass = candidates.filter(F.col("dont_filter"))
+    key = SEEN_KEY + ["bucket"]
     if cuckoos is not None:
         from scrapy_cluster_spark.operators.cuckoo import cuckoo_filtered_anti_join
 
-        new = cuckoo_filtered_anti_join(probed, seen, cuckoos, SEEN_KEY + ["bucket"])
-        new = new.select(*probed.columns)
-    elif blooms is not None:
-        from scrapy_cluster_spark.operators.bloom import bloom_filtered_anti_join
-
-        new = bloom_filtered_anti_join(probed, seen, blooms, SEEN_KEY + ["bucket"])
-        new = new.select(*probed.columns)
+        new = cuckoo_filtered_anti_join(probed, seen, cuckoos, key).select(*probed.columns)
     else:
-        new, _dupes = split_new_vs_seen(probed, seen)
+        new = probed.join(seen.select(*key), key, "left_anti")
     return bypass.unionByName(new), new

@@ -31,20 +31,15 @@ from scrapy_cluster_spark.schemas import CRAWLED_SCHEMA
 _PAGE_COLS = ["html", "text", "lang", "warc_ts"]
 
 
-def fetch_batch(
-    scheduled: DataFrame,
-    pages: DataFrame,
-    handles: list | None = None,
-    persist_hits: bool = False,
-) -> DataFrame:
+def fetch_batch(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     """Scheduled rows ⨝ pages — adds html/text/lang/warc_ts, null when
     the url does not exist (fetch failure).
 
-    Plan shape (default, ``persist_hits=False``): one FULL-WIDTH pages
-    scan feeds the inner join; misses come from an anti join against
-    ``pages.select("url")`` — a second scan that column pruning reduces
-    to the url column alone (~1% of table bytes on a Common-Crawl-shaped
-    table).  NOTHING html-bearing is ever persisted.
+    Plan shape: one FULL-WIDTH pages scan feeds the inner join; misses
+    come from an anti join against ``pages.select("url")`` — a second
+    scan that column pruning reduces to the url column alone (~1% of
+    table bytes on a Common-Crawl-shaped table).  NOTHING html-bearing
+    is ever persisted.
 
     Why not persist the hits (round-2 verdict "What's wrong #2", the
     fetch join was the only phase that got SLOWER 4→16 cores): when the
@@ -55,25 +50,10 @@ def fetch_batch(
     31-65 s @16c WITH the persist; 7.4 s @4c → 4.7-5.4 s @16c without,
     pages cached or parquet — the anti-scaling was entirely the persist;
     DISK_ONLY persisted equally badly, 24-26 s @16c, because the cost is
-    writing GBs through the block manager, not the storage pool).
-
-    ``persist_hits=True`` restores the round-1/2 shape — one pages scan
-    total, misses anti-joined against the persisted (quota-bounded)
-    hits, caller owns the lifetime via ``handles`` — for deployments
-    where the batch is tiny relative to pages and even a url-column
-    second scan of 10¹⁰ rows outweighs materializing ≤ Σ quota hit
-    rows.  That is the right dial on a real 100 TB cluster with small
-    politeness budgets; the default is right whenever batch size is
-    within a few orders of magnitude of the corpus."""
+    writing GBs through the block manager, not the storage pool)."""
     page_cols = pages.select("url", *_PAGE_COLS)
     hits = page_cols.join(scheduled, "url", "inner")
-    if persist_hits:
-        hits = hits.persist()
-        if handles is not None:
-            handles.append(hits)
-        missed = scheduled.join(hits.select("url"), "url", "left_anti")
-    else:
-        missed = scheduled.join(pages.select("url"), "url", "left_anti")
+    missed = scheduled.join(pages.select("url"), "url", "left_anti")
     for name in _PAGE_COLS:
         missed = missed.withColumn(
             name, F.lit(None).cast(pages.schema[name].dataType)

@@ -17,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from scrapy_cluster_spark.config import DEFAULT_CONFIG, EngineConfig
-from scrapy_cluster_spark.operators.bloom import BLOOM_SCHEMA, build_delta_blooms
 from scrapy_cluster_spark.schemas import FETCH_LOG_SCHEMA, SEEN_SCHEMA
 from scrapy_cluster_spark.store import SnapshotStore
 
@@ -28,22 +27,14 @@ def expire_seen(store: SnapshotStore, current_round: int,
 
     The reference TTL is idle-based per crawlid; round-based age is the
     batch discretization (ttl_rounds = timeout / round_len — 10 rounds
-    at defaults).  Returns rows kept.  Rebuilds the bloom sidecars from
-    the surviving rows (a stale bloom only costs false positives, but a
-    rebuilt one keeps the fpr budget)."""
+    at defaults).  Returns rows kept.  With ``use_cuckoo`` the expired
+    fingerprints are also deleted from the cuckoo sidecars."""
     ttl_rounds = max(1, cfg.dupefilter_timeout // cfg.round_len)
     horizon = current_round - ttl_rounds
     seen = store.read("seen", SEEN_SCHEMA)
     kept = seen.filter(F.col("seen_round") > F.lit(horizon))
     expired = seen.filter(F.col("seen_round") <= F.lit(horizon))
     store.overwrite("seen", kept, meta={"retention_round": current_round})
-    if cfg.use_bloom:
-        store.overwrite(
-            "blooms",
-            build_delta_blooms(kept, cfg.bloom_m_bits, cfg.bloom_k),
-            meta={"retention_round": current_round},
-            coalesce=1,
-        )
     if cfg.use_cuckoo and store.exists("cuckoos"):
         # the reason cuckoo exists: DELETE the expired fingerprints in
         # place (per-bucket cogroup) — no full rebuild from `kept`

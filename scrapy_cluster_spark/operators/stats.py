@@ -65,16 +65,6 @@ def live_heartbeats(heartbeats: DataFrame, now: float, ttl: int = 120) -> DataFr
 # metrics_events-style aggregations
 # ---------------------------------------------------------------------------
 
-def rolling_window_count(events: DataFrame, ts_col: str, now: float, window_s: int,
-                         group_cols: list[str] | None = None) -> DataFrame:
-    """RollingTimeWindow.value() — count of events in the trailing window
-    (stats_collector.py:447-471)."""
-    trailing = events.filter(F.col(ts_col) > F.lit(now) - F.lit(window_s))
-    if group_cols:
-        return trailing.groupBy(*group_cols).agg(F.count("*").alias("value"))
-    return trailing.agg(F.count("*").alias("value"))
-
-
 def lifetime_unique(events: DataFrame, col: str, rsd: float = 0.01) -> DataFrame:
     """HyperLogLogCounter.value() — PFCOUNT ≈ approx_count_distinct; the
     reference HLL also runs at ~1% error (stats_collector.py:529-553)."""
@@ -115,13 +105,6 @@ def hll_estimate(sketches: DataFrame) -> DataFrame:
 def exact_unique(events: DataFrame, col: str) -> DataFrame:
     """UniqueCounter (SADD/SCARD, stats_collector.py:503-526)."""
     return events.agg(F.countDistinct(col).alias("value"))
-
-
-def tumbling_window_counts(events: DataFrame, ts_col: str, window: str,
-                           group_cols: list[str] | None = None) -> DataFrame:
-    """TimeWindow (stats_collector.py:416-444) → groupBy(F.window(...))."""
-    keys = [F.window(F.col(ts_col), window).alias("win")] + [F.col(c) for c in (group_cols or [])]
-    return events.groupBy(*keys).agg(F.count("*").alias("value"))
 
 
 def bitmap_counter(events: DataFrame, idx_col: str,
@@ -420,16 +403,6 @@ def queue_stats_df(frontier: DataFrame) -> DataFrame:
     return frontier.groupBy("spiderid").agg(
         F.count("*").alias("spider_backlog"),
         F.countDistinct("domain").alias("num_domains"),
-    )
-
-
-def machine_stats_df(crawled: DataFrame) -> DataFrame:
-    """StatsMonitor.get_machine_stats (:211-244) analog: per status_code
-    totals (one logical machine in-sandbox)."""
-    return (
-        crawled.filter(F.col("status_code").isNotNull())
-        .groupBy("status_code")
-        .agg(F.count("*").alias("total"))
     )
 
 

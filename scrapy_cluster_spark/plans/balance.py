@@ -1,21 +1,16 @@
 """Partition-balance diagnostics — the scale-readiness evidence.
 
-At 10^10 rows the questions that decide survival are: is the frontier
-evenly spread over its domain-hash buckets (partition pruning + bloom
-sidecars assume so), and does any single domain dominate a bucket
-(window-rank skew → the two-phase salted top-k exists for this).
-These metrics come from parquet footers + one light aggregation and are
-recorded alongside the bench so every round's BENCH JSON carries the
-balance picture.
+At 10^10 rows one question that decides survival is whether the
+frontier is evenly spread over its domain-hash buckets (partition
+pruning and the per-bucket cuckoo sidecars assume so).  The metric
+comes from parquet footers and is recorded alongside the bench so
+every round's BENCH JSON carries the balance picture.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from collections import defaultdict
-
-from pyspark.sql import DataFrame, functions as F
 
 from scrapy_cluster_spark.store import SnapshotStore
 
@@ -45,20 +40,3 @@ def bucket_balance(store: SnapshotStore, table: str = "frontier") -> dict:
         "skew_ratio": round(counts[-1] / mean, 3) if mean else None,
     }
 
-
-def domain_concentration(frontier: DataFrame, top_k: int = 5) -> dict:
-    """Share of the frontier held by the hottest domains — the signal
-    that decides whether salted two-phase ranking is load-bearing."""
-    total = frontier.count()
-    top = (
-        frontier.groupBy("domain")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"))
-        .limit(top_k)
-        .collect()
-    )
-    return {
-        "total_rows": total,
-        "top_domains": [{"domain": r["domain"], "rows": r["n"]} for r in top],
-        "top_share": round(sum(r["n"] for r in top) / total, 4) if total else 0.0,
-    }

@@ -12,7 +12,7 @@ fetch order (from ``fetch_log``), plus URL-seen set equality.
 
 The engine's scheduler IS that sort (ranking.py), so the expected rate
 is 1.0 — the metric exists to prove it stays 1.0 under salting,
-blooming, resume, and parallelism changes.
+membership sidecars, resume, and parallelism changes.
 """
 
 from __future__ import annotations

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from scrapy_cluster_spark.config import DEFAULT_CONFIG, EngineConfig
 from scrapy_cluster_spark.operators import (
-    bloom,
     dedupe,
     fetch,
     limits,
@@ -75,7 +74,6 @@ STATE_TABLES = [
     "blacklist",
     "domain_config",
     "robots_rules",
-    "blooms",
     "cuckoos",
     # appended after the concurrent writes but BEFORE the lineage commit
     # — in lineage so crash-resume rollback covers them (a crash between
@@ -234,14 +232,8 @@ def run_round(
     # (write job + file re-read) is pure fixed latency there (measured
     # +10-20 s/round on a 33k-row bench round at local[32]).
     out_versions = dict(pins)
-    fetch_handles: list = []
     items_full = fetch.assemble_items(
-        fetch.fetch_batch(
-            scheduled, pages, handles=fetch_handles,
-            persist_hits=cfg.fetch_persist_hits,
-        ),
-        round_id,
-        cfg.round_len,
+        fetch.fetch_batch(scheduled, pages), round_id, cfg.round_len
     )
     n_batch = scheduled.count()  # the barrier count, moved up to steer
     write_through = n_batch >= cfg.write_through_min_batch
@@ -274,7 +266,6 @@ def run_round(
             F.lit(round_id).cast("long").alias("round"), "slot_ts",
         ),
         meta={"round": round_id},
-        coalesce=cfg.append_coalesce,
     )))
     # pool + early future live inside ONE try/finally: an exception
     # anywhere in the fetch/barrier/write phase must still resolve the
@@ -283,7 +274,6 @@ def run_round(
     # interpreter exit on the in-flight write)
     try:
         crawled_write = None
-        _crawled_write_sec = 0.0
         if write_through:
             items_wide = fetch.wide_items(items_full).withColumn("ok", F.col("success"))
             _t_crawled = time.time()
@@ -340,9 +330,6 @@ def run_round(
             round_id, cfg, source="spider",
         )
         children = robots.apply_robots(children, robots_rules).persist()
-        blooms_df = (
-            store.read("blooms", bloom.BLOOM_SCHEMA, pins["blooms"]) if cfg.use_bloom else None
-        )
         cuckoos_df = None
         if cfg.use_cuckoo:
             from scrapy_cluster_spark.operators import cuckoo as cuckoo_mod
@@ -352,8 +339,8 @@ def run_round(
                 # (round-4 advice): cuckoo_probe answers definite-new for
                 # buckets with no filter row, so without this bootstrap
                 # every previously-seen URL would skip the exact anti-join
-                # and re-enqueue — and unlike bloom the sidecar is never
-                # rebuilt from seen, so it would never self-heal.  Build the
+                # and re-enqueue — and the sidecar is never rebuilt from
+                # seen, so it would never self-heal.  Build the
                 # sidecars from the pinned seen snapshot once (same multiset
                 # the per-round upserts would have inserted; retention's
                 # per-row deletes stay balanced).
@@ -365,9 +352,7 @@ def run_round(
                 )
                 out_versions["cuckoos"] = pins["cuckoos"]
             cuckoos_df = store.read("cuckoos", cuckoo_mod.CUCKOO_SCHEMA, pins["cuckoos"])
-        passed_dupe, seen_inserts = dedupe.apply_dupefilter(
-            children, seen, blooms_df, cuckoos_df
-        )
+        passed_dupe, seen_inserts = dedupe.apply_dupefilter(children, seen, cuckoos_df)
 
         retries = parse.retry_candidates(items, cfg).select(*[f.name for f in FRONTIER_SCHEMA.fields])
         enqueue_in = passed_dupe.unionByName(retries)
@@ -489,18 +474,10 @@ def run_round(
         }
         if crawled_write is not None:
             writes["crawled"] = crawled_write
-        if cfg.use_bloom:
-            # delta bloom over this round's new fps; OR-merged at probe time
-            writes["blooms"] = lambda: store.append(
-                "blooms",
-                bloom.build_delta_blooms(seen_inserts, cfg.bloom_m_bits, cfg.bloom_k),
-                meta={"round": round_id},
-                coalesce=1,
-            )
         if cfg.use_cuckoo:
             # cuckoo is a MAINTAINED table (upsert-in-place per bucket), not
-            # an append-delta like bloom: cogroup this round's new fps into
-            # the pinned sidecars and commit the rewritten snapshot
+            # an append-delta: cogroup this round's new fps into the pinned
+            # sidecars and commit the rewritten snapshot
             from scrapy_cluster_spark.operators import cuckoo as cuckoo_mod
 
             writes["cuckoos"] = lambda: store.overwrite(
@@ -512,13 +489,8 @@ def run_round(
                 coalesce=1,
             )
 
-        profile: dict | None = (
-            {"setup_sec": round(time.time() - t0, 2)}
-            if os.environ.get("SPARK_GRAFT_PROFILE")
-            else None
-        )
-
-        if profile is not None and write_through:
+        profile = {"setup_sec": round(time.time() - t0, 2)}
+        if write_through:
             profile["write_crawled_sec"] = _crawled_write_sec
         t_writes = time.time()
         futures = {t: pool.submit(_timed_write(t, fn)) for t, fn in writes.items()}
@@ -531,9 +503,8 @@ def run_round(
         out_versions["fetch_log"] = fut_fetch_log.result()
     finally:
         pool.shutdown(wait=True)
-    if profile is not None:
-        profile["writes_wall_sec"] = round(time.time() - t_writes, 2)
-        profile.update({f"write_{n}_sec": s for n, s in _write_times.items()})
+    profile["writes_wall_sec"] = round(time.time() - t_writes, 2)
+    profile.update({f"write_{n}_sec": s for n, s in _write_times.items()})
 
     # ---- round stats from committed parquet footers (no Spark jobs)
     def _delta(table: str) -> list[str]:
@@ -592,17 +563,13 @@ def run_round(
     items.unpersist()
     children.unpersist()
     enqueue_in.unpersist()
-    for h in fetch_handles:
-        h.unpersist()
-
-    if profile is not None:
-        profile["stats_sec"] = round(time.time() - t_writes - profile["writes_wall_sec"], 2)
+    profile["stats_sec"] = round(time.time() - t_writes - profile["writes_wall_sec"], 2)
 
     lineage = {
         "round": round_id,
         "inputs": pins,
         "outputs": out_versions,
-        **({"profile": profile} if profile is not None else {}),
+        "profile": profile,
         "scheduled": n_scheduled,
         "crawled_ok": n_ok,
         "candidates": n_candidates,

@@ -42,12 +42,6 @@ def crawled_firehose_json(crawled: DataFrame, use_base64: bool = False) -> DataF
     return crawled.select(F.col("appid"), payload.alias("value"))
 
 
-def appid_fanout(crawled: DataFrame, appid: str) -> DataFrame:
-    """The per-appid topic filter (<prefix>.crawled_<appid>,
-    pipelines.py:201-211)."""
-    return crawled_firehose_json(crawled.filter(F.col("appid") == appid))
-
-
 # LoggingBeforePipeline/_clean_item drops the bulky response fields and
 # stamps the ack before emitting an item to the log stream
 # (pipelines.py:140-154): body, links, response_headers, request_headers,

@@ -26,9 +26,11 @@ TESTDATA_TABLES = [
     "embeddings",
 ]
 
-# (path, mtime) → (row_groups, rows, bytes): footer probe is pure
+# path → (mtime, (row_groups, rows, bytes)): footer probe is pure
 # metadata, a few KB per file; cached so repeated load_table calls
 # (bench reps, the driver's 50-query sweep) stat the footer once.
+# A rewritten file replaces its entry, so the cache holds one entry
+# per path however often the file changes.
 _FOOTER_CACHE: dict = {}
 
 # Mean uncompressed bytes/row above which a row-group-starved table is
@@ -47,18 +49,19 @@ def _splittable_units(path: str) -> tuple[int, int, float]:
     )
     rgs = rows = nbytes = 0
     for f in files:
-        key = (f, os.path.getmtime(f))
-        if key not in _FOOTER_CACHE:
+        mtime = os.path.getmtime(f)
+        cached = _FOOTER_CACHE.get(f)
+        if cached is None or cached[0] != mtime:
             import pyarrow.parquet as pq
 
             md = pq.ParquetFile(f).metadata
-            _FOOTER_CACHE[key] = (
+            cached = _FOOTER_CACHE[f] = (mtime, (
                 md.num_row_groups,
                 md.num_rows,
                 sum(md.row_group(i).total_byte_size
                     for i in range(md.num_row_groups)),
-            )
-        r, n, b = _FOOTER_CACHE[key]
+            ))
+        r, n, b = cached[1]
         rgs += r
         rows += n
         nbytes += b

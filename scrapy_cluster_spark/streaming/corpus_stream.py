@@ -18,8 +18,8 @@ per-source health windows run on the live feed:
   arriving within the watermark delay — exactly the "same page
   crawled twice in quick succession" stream case, with state bounded
   by the watermark instead of growing with the corpus.  The DURABLE
-  membership structure stays the frontier's bloom/cuckoo + anti-join
-  path (operators/dedupe.py); this gate only de-noises the live feed
+  membership structure stays the seen-table anti-join (with its
+  opt-in cuckoo pre-filter, operators/dedupe.py); this gate only de-noises the live feed
   before it lands, so the two compose: stream-dedup cheaply, then the
   exact batch dedupe on landing reconciles anything beyond the
   watermark horizon.

@@ -12,7 +12,7 @@ import sys
 sys.path.insert(0, ".")
 
 from scrapy_cluster_spark import schemas  # noqa: E402
-from scrapy_cluster_spark.operators.bloom import BLOOM_SCHEMA  # noqa: E402
+from scrapy_cluster_spark.operators.cuckoo import CUCKOO_SCHEMA  # noqa: E402
 from scrapy_cluster_spark.operators.robots import ROBOTS_SCHEMA  # noqa: E402
 from scrapy_cluster_spark.plans.round import PAGE_COUNTS_SCHEMA  # noqa: E402
 from scrapy_cluster_spark.session import get_spark  # noqa: E402
@@ -31,7 +31,7 @@ TABLE_SCHEMAS = {
     "metrics": schemas.METRICS_SCHEMA,
     "heartbeats": schemas.HEARTBEATS_SCHEMA,
     "page_counts": PAGE_COUNTS_SCHEMA,
-    "blooms": BLOOM_SCHEMA,
+    "cuckoos": CUCKOO_SCHEMA,
     "robots_rules": ROBOTS_SCHEMA,
 }
 

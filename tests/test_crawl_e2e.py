@@ -163,7 +163,12 @@ def test_politeness_budget(store, pages):
           "priority": 10, "maxdepth": 0} for j in range(12)],
         CFG,
     )
-    run_crawl(store, pages, CFG, max_rounds=4)
+    lineage = run_crawl(store, pages, CFG, max_rounds=4)
+    # the round profile is always on: every lineage row carries it
+    assert lineage and all(
+        {"setup_sec", "writes_wall_sec", "stats_sec"} <= row["profile"].keys()
+        for row in lineage
+    )
     log = store.read("fetch_log", FETCH_LOG_SCHEMA)
     per_round = log.groupBy("domain", "round").count().collect()
     assert all(r["count"] <= 10 for r in per_round)

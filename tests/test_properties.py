@@ -8,7 +8,7 @@ default budget.
 
 import string
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -473,3 +473,79 @@ def test_vocab_topk_is_exact_head(spark, doc_tokens):
                for r in sorted(L.vocab_topk(df, k=k).collect(),
                                key=lambda r: r.rank)]
         assert got == full[:k]
+
+
+# ---------------------------------------------------------------------------
+# Spark-backed: cuckoo sidecar on ≡ sidecar off in the dupefilter
+# ---------------------------------------------------------------------------
+
+_dupe_cands = st.lists(
+    st.tuples(
+        st.sampled_from(["c0", "c1"]),                      # crawlid
+        st.integers(min_value=0, max_value=11),             # fingerprint idx
+        st.integers(min_value=0, max_value=3),              # bucket
+        st.booleans(),                                      # dont_filter
+    ),
+    min_size=1,
+    max_size=30,                                            # repeats allowed
+)
+_dupe_seen = st.lists(
+    st.tuples(
+        st.sampled_from(["c0", "c1"]),
+        st.integers(min_value=0, max_value=11),
+        st.integers(min_value=0, max_value=2),              # bucket 3: never seen
+    ),
+    max_size=30,
+)
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(cands=_dupe_cands, seen=_dupe_seen, m=st.sampled_from([2, 1 << 10]),
+       stale=st.lists(st.integers(min_value=0, max_value=11), max_size=4))
+@example(  # empty seen: no filter rows at all
+    cands=[("c0", 1, 0, False), ("c0", 1, 0, False), ("c1", 2, 3, True)],
+    seen=[], m=1 << 10, stale=[],
+)
+@example(  # saturated tiny filter + duplicate and dont_filter candidates
+    cands=[("c0", i % 6, 0, i % 5 == 0) for i in range(14)] + [("c1", 3, 3, False)],
+    seen=[("c0", i, 0) for i in range(10)] + [("c1", 3, 1)], m=2, stale=[11],
+)
+def test_cuckoo_dupefilter_equals_plain(spark, cands, seen, m, stale):
+    """apply_dupefilter with the cuckoo sidecar returns the same
+    multisets of passed rows and seen inserts as the plain anti-join —
+    with an empty seen table, candidate buckets that have no filter row,
+    saturated filters, repeated candidates, dont_filter bypass rows and
+    stale fingerprints the filter holds but seen does not."""
+    import hashlib
+
+    from scrapy_cluster_spark.operators.cuckoo import build_cuckoo
+    from scrapy_cluster_spark.operators.dedupe import apply_dupefilter
+    from scrapy_cluster_spark.schemas import SEEN_SCHEMA
+
+    def fp(i):
+        return hashlib.sha1(f"u{i}".encode()).hexdigest()
+
+    cand = spark.createDataFrame(
+        [("link", c, f"http://d.com/{i}", fp(i), b, df)
+         for c, i, b, df in cands],
+        "spiderid string, crawlid string, url string, fingerprint string, "
+        "bucket int, dont_filter boolean",
+    )
+    seen_df = spark.createDataFrame(
+        [("link", c, fp(i), 1, b) for c, i, b in seen], SEEN_SCHEMA
+    )
+    # the engine builds the sidecar from seen; stale extra fps (e.g. left
+    # by a retention pass) may only cause false positives, never drops
+    stale_df = spark.createDataFrame(
+        [("link", "c0", fp(i), 0, b) for i in stale for b in range(3)], SEEN_SCHEMA
+    )
+    cuckoos = build_cuckoo(seen_df.unionByName(stale_df), m=m)
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*cand.columns).collect()))
+
+    plain_passed, plain_ins = apply_dupefilter(cand, seen_df)
+    ck_passed, ck_ins = apply_dupefilter(cand, seen_df, cuckoos)
+    assert rows(ck_passed) == rows(plain_passed)
+    assert rows(ck_ins) == rows(plain_ins)
