@@ -40,6 +40,25 @@ def cosine(a, b, decimals: int = 4) -> Column:
     return F.round(dot(a, b) / (norm(a) * norm(b)), decimals)
 
 
+def _round_half_up(x: np.ndarray, decimals: int) -> np.ndarray:
+    """numpy twin of Spark's ``round`` on doubles: HALF_UP on the
+    double's shortest decimal form (``BigDecimal.valueOf``), where
+    ``np.round`` rounds half to even on the binary value (29/32 =
+    0.90625 → 0.9062, Spark says 0.9063).  Only values within a hair of
+    a tie take the exact decimal path."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    out = np.round(x, decimals)
+    scaled = np.abs(x) * 10.0**decimals
+    near = np.abs(scaled - np.floor(scaled) - 0.5) < 1e-6
+    if near.any():
+        q = Decimal(1).scaleb(-decimals)
+        out[near] = [
+            float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP)) for v in x[near]
+        ]
+    return out
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -244,7 +263,8 @@ def neardup_pairs_blocked(
     plan; the physical shape is:
 
       block-id tag (xxhash64 — deterministic, guide §2.5) →
-      ≤(B/2+1)-way replicate of each (id, vec) row →
+      B-way replicate of each (id, vec) row (a row in block g lands
+      B−g times as L, in tiles (g, h≥g), and g times as R) →
       one shuffle on (gi, gj) → per-tile GEMM in Arrow batches →
       qualifying (a, b, cos) rows only.
 
@@ -301,12 +321,13 @@ def neardup_pairs_blocked(
         else:
             ids_r = rp["_id"].to_numpy()
             Y = np.asarray(list(rp["_v"]), dtype=np.float64)
-        # cos = dot / (||x||·||y||), matching cosine()'s algebra; 4-dp
-        # rounding absorbs the GEMM-vs-left-fold summation-order ulps
+        # cos = dot / (||x||·||y||), matching cosine()'s algebra and its
+        # half-up rounding; 4-dp rounding absorbs the GEMM-vs-left-fold
+        # summation-order ulps
         nl = np.sqrt((X * X).sum(axis=1))
         nr = nl if diag else np.sqrt((Y * Y).sum(axis=1))
         with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.round((X @ Y.T) / np.outer(nl, nr), dec)
+            cos = _round_half_up((X @ Y.T) / np.outer(nl, nr), dec)
         # Spark NaN ordering: NaN compares greater than any double, so
         # `cos >= thr` admits NaN — mirror it (zero-norm degenerates)
         hit = (cos >= thr) | np.isnan(cos)

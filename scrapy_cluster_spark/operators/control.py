@@ -27,13 +27,19 @@ import json
 from pyspark.sql import DataFrame, functions as F
 
 from scrapy_cluster_spark.config import DEFAULT_CONFIG, EngineConfig
-from scrapy_cluster_spark.operators.stats import build_appid_info, build_crawlid_info
+from scrapy_cluster_spark.operators.stats import (
+    build_appid_info,
+    build_crawlid_info,
+    build_stats_payload,
+)
 from scrapy_cluster_spark.schemas import (
     ACTIONS_SCHEMA,
     BLACKLIST_SCHEMA,
+    CRAWLED_SCHEMA,
     CRAWL_JOBS_SCHEMA,
     DOMAIN_CONFIG_SCHEMA,
     FRONTIER_SCHEMA,
+    HEARTBEATS_SCHEMA,
     METRICS_SCHEMA,
     OUTBOUND_SCHEMA,
 )
@@ -281,9 +287,6 @@ def process_actions(
                     )
                 acks.append(_ack(r, "info", payload, now))
             elif a == "stats":
-                from scrapy_cluster_spark.operators.stats import build_stats_payload
-                from scrapy_cluster_spark.schemas import CRAWLED_SCHEMA, HEARTBEATS_SCHEMA
-
                 payload = build_stats_payload(
                     frontier,
                     store.read("crawled", CRAWLED_SCHEMA),
@@ -402,7 +405,7 @@ def feed_action(store: SnapshotStore, action: dict) -> None:
     Also records the kafka-monitor per-plugin handled count
     (kafka_monitor.py:289 ``_increment_plugin_stat``)."""
     row = {f.name: action.get(f.name) for f in ACTIONS_SCHEMA.fields}
-    store.append("actions", store.spark.createDataFrame([row], ACTIONS_SCHEMA))
+    store.append_rows("actions", [row], ACTIONS_SCHEMA)
     plugin = _FEED_PLUGIN.get(action.get("action"))
     ts = float(action.get("ts") or 0.0)
     rows = [{"round": None, "component": "kafka-monitor", "kind": "total",

@@ -6,7 +6,7 @@ UniqueCounter (:503-526), BitMapCounter (:556-576) — all Redis zset/HLL
 tricks that collapse to built-in Spark aggregates (SURVEY.md §2.5):
 
   rolling window  → filter(ts > now - window).count()
-  HLL lifetime    → approx_count_distinct
+  HLL lifetime    → hll_sketch_agg / hll_union_agg (mergeable state)
   unique          → countDistinct
   counter         → count / sum
   tumbling window → groupBy(F.window(ts, ...))
@@ -27,14 +27,30 @@ from pyspark.sql import DataFrame, functions as F
 STATS_TIMES = [900, 3600, 21600, 43200, 86400, 604800]
 
 
-def _windowed_counts(df: DataFrame, ts_expr, now: float, group_cols: list[str]) -> DataFrame:
+def _windowed_counts(df: DataFrame, ts_expr, now: float, group_cols: list,
+                     weight=None) -> DataFrame:
     """lifetime + one trailing-window count per STATS_TIMES entry, in a
-    single grouped aggregation (one pass, map-side combinable)."""
-    aggs = [F.count("*").alias("lifetime")] + [
-        F.sum(F.when(ts_expr > F.lit(now) - F.lit(w), 1).otherwise(0)).alias(f"w_{w}")
-        for w in STATS_TIMES
-    ]
-    return df.groupBy(*[F.col(c) for c in group_cols]).agg(*aggs)
+    single grouped aggregation (one pass, map-side combinable).
+
+    With a ``weight`` column the counts are weight sums cast to long
+    (one metrics row records n handled items — the rolling-counter
+    increment semantics of stats_collector.py), and ``weight_sum``
+    carries the uncast sum alongside."""
+    if weight is None:
+        aggs = [F.count("*").alias("lifetime")] + [
+            F.sum(F.when(ts_expr > F.lit(now) - F.lit(w), 1).otherwise(0)).alias(f"w_{w}")
+            for w in STATS_TIMES
+        ]
+    else:
+        aggs = [
+            F.sum(weight).cast("long").alias("lifetime"),
+            F.sum(weight).alias("weight_sum"),
+        ] + [
+            F.sum(F.when(ts_expr > F.lit(now) - F.lit(w), weight).otherwise(0))
+            .cast("long").alias(f"w_{w}")
+            for w in STATS_TIMES
+        ]
+    return df.groupBy(*group_cols).agg(*aggs)
 
 
 def _window_dict(row) -> dict:
@@ -65,12 +81,6 @@ def live_heartbeats(heartbeats: DataFrame, now: float, ttl: int = 120) -> DataFr
 # metrics_events-style aggregations
 # ---------------------------------------------------------------------------
 
-def lifetime_unique(events: DataFrame, col: str, rsd: float = 0.01) -> DataFrame:
-    """HyperLogLogCounter.value() — PFCOUNT ≈ approx_count_distinct; the
-    reference HLL also runs at ~1% error (stats_collector.py:529-553)."""
-    return events.agg(F.approx_count_distinct(col, rsd).alias("value"))
-
-
 def hll_sketch_rollup(events: DataFrame, key_cols: list[str], value_col: str,
                       lg_k: int = 12) -> DataFrame:
     """Mergeable HLL state per key — the reference's incrementally
@@ -79,8 +89,8 @@ def hll_sketch_rollup(events: DataFrame, key_cols: list[str], value_col: str,
     its DELTA, ``hll_merge`` unions stored sketches across rounds (and,
     on a cluster, across executors/machines), ``hll_estimate`` reads
     the count out.  This is what makes the lifetime-unique counter
-    O(new data) per round at 10^10 URLs: ``lifetime_unique`` rescans
-    history; a stored sketch never does."""
+    O(new data) per round at 10^10 URLs: a one-shot
+    approx_count_distinct rescans history; a stored sketch never does."""
     return events.groupBy(*key_cols).agg(
         F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("hll_sketch")
     )
@@ -100,11 +110,6 @@ def hll_estimate(sketches: DataFrame) -> DataFrame:
     return sketches.withColumn(
         "value", F.hll_sketch_estimate("hll_sketch")
     ).drop("hll_sketch")
-
-
-def exact_unique(events: DataFrame, col: str) -> DataFrame:
-    """UniqueCounter (SADD/SCARD, stats_collector.py:503-526)."""
-    return events.agg(F.countDistinct(col).alias("value"))
 
 
 def bitmap_counter(events: DataFrame, idx_col: str,
@@ -138,8 +143,8 @@ def bitmap_counter(events: DataFrame, idx_col: str,
 # frontier rollups (info / queue APIs)
 # ---------------------------------------------------------------------------
 
-def appid_info_df(frontier: DataFrame, spiderid: str, appid: str) -> DataFrame:
-    """Per-(crawlid, domain) bins for an appid: total + high/low priority
+def _info_bins(frontier: DataFrame, spiderid: str, appid: str) -> DataFrame:
+    """Per-(crawlid, domain) bins of an appid: total + high/low priority
     (info_monitor zscore binning :60-79 — zset scores are -priority, so
     'high' = max(priority), 'low' = min(priority))."""
     return (
@@ -153,6 +158,20 @@ def appid_info_df(frontier: DataFrame, spiderid: str, appid: str) -> DataFrame:
     )
 
 
+def _bin_dict(b) -> dict:
+    return {k: b[k] for k in ("total", "high_priority", "low_priority")}
+
+
+def _ranked(key: str, by: str):
+    """(rank window, whole-partition frame) per ``key``, ordered by
+    ``by`` desc then domain asc — one sort serves the rank and the
+    per-key totals."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(key).orderBy(F.desc(by), F.asc("domain"))
+    return w, w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
+
 def build_appid_info(
     frontier: DataFrame, spiderid: str, appid: str, domains_cap: int = 100
 ) -> dict:
@@ -162,35 +181,41 @@ def build_appid_info(
     The per-crawlid domain list is CAPPED at ``domains_cap`` top-backlog
     domains (window rank before the collect — same driver-OOM guard as
     the queue stats payload): the reference payload is unbounded, which
-    OOMs the driver at 10⁶ (crawlid, domain) bins.  Totals stay exact
-    (computed as aggregates, not from the capped list); a truncated
-    crawlid carries a ``domains_truncated`` marker."""
-    from pyspark.sql import Window
-
-    bins_df = appid_info_df(frontier, spiderid, appid)
-    per_crawlid = bins_df.groupBy("crawlid").agg(
-        F.sum("total").alias("total"), F.count("*").alias("distinct_domains")
-    ).collect()
-    total_domains = bins_df.agg(F.countDistinct("domain").alias("n")).collect()[0]["n"]
-    w = Window.partitionBy("crawlid").orderBy(F.desc("total"), F.asc("domain"))
-    bins = (
-        bins_df.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= domains_cap)
+    OOMs the driver at 10⁶ (crawlid, domain) bins.  Totals stay exact:
+    the per-crawlid sums ride the rank window's whole-partition frame and
+    the appid's distinct-domain count is one summary row unioned onto the
+    capped bins — one collect.  A truncated crawlid carries a
+    ``domains_truncated`` marker.  Each crawlid keeps its rank-1 row
+    even at ``domains_cap`` 0, so its totals survive the cap."""
+    bins = _info_bins(frontier, spiderid, appid)
+    rank, whole = _ranked("crawlid", "total")
+    rows = (
+        bins.select(
+            "*",
+            F.row_number().over(rank).alias("rk"),
+            F.sum("total").over(whole).alias("crawlid_total"),
+            F.count("*").over(whole).alias("distinct_domains"),
+        )
+        .filter(F.col("rk") <= max(domains_cap, 1))
+        .unionByName(
+            bins.agg(F.countDistinct("domain").alias("total_domains")),
+            allowMissingColumns=True,
+        )
         .collect()
     )
+    total_domains = 0
     crawlids: dict = {}
-    for c in per_crawlid:
-        crawlids[c["crawlid"]] = {
-            "total": int(c["total"]),
-            "distinct_domains": c["distinct_domains"],
+    for b in rows:
+        if b["total_domains"] is not None:  # the summary row
+            total_domains = b["total_domains"]
+            continue
+        c = crawlids.setdefault(b["crawlid"], {
+            "total": int(b["crawlid_total"]),
+            "distinct_domains": b["distinct_domains"],
             "domains": {},
-        }
-    for b in bins:
-        crawlids[b["crawlid"]]["domains"][b["domain"]] = {
-            "total": b["total"],
-            "high_priority": b["high_priority"],
-            "low_priority": b["low_priority"],
-        }
+        })
+        if b["rk"] <= domains_cap:
+            c["domains"][b["domain"]] = _bin_dict(b)
     for c in crawlids.values():
         if c["distinct_domains"] > len(c["domains"]):
             c["domains_truncated"] = c["distinct_domains"] - len(c["domains"])
@@ -208,20 +233,7 @@ def build_crawlid_info(frontier: DataFrame, crawl_jobs: DataFrame,
                        spiderid: str, appid: str, crawlid: str) -> dict:
     """InfoMonitor._build_crawlid_info (:152-202): one crawl's bins +
     expires from the timeout key (crawl_jobs)."""
-    bins = (
-        frontier.filter(
-            (F.col("spiderid") == spiderid)
-            & (F.col("appid") == appid)
-            & (F.col("crawlid") == crawlid)
-        )
-        .groupBy("domain")
-        .agg(
-            F.count("*").alias("total"),
-            F.max("priority").alias("high_priority"),
-            F.min("priority").alias("low_priority"),
-        )
-        .collect()
-    )
+    bins = _info_bins(frontier, spiderid, appid).filter(F.col("crawlid") == crawlid).collect()
     exp = (
         crawl_jobs.filter(
             (F.col("spiderid") == spiderid)
@@ -238,14 +250,7 @@ def build_crawlid_info(frontier: DataFrame, crawl_jobs: DataFrame,
         "total_pending": sum(b["total"] for b in bins),
         "total_domains": len(bins),
         "expires": exp[0]["expires"] if exp else 0,
-        "domains": {
-            b["domain"]: {
-                "total": b["total"],
-                "high_priority": b["high_priority"],
-                "low_priority": b["low_priority"],
-            }
-            for b in bins
-        },
+        "domains": {b["domain"]: _bin_dict(b) for b in bins},
     }
 
 
@@ -256,59 +261,69 @@ def build_stats_payload(frontier: DataFrame, crawled: DataFrame, metrics: DataFr
                         queue_domains_cap: int = 100) -> dict:
     """StatsMonitor.handle dispatch (stats_monitor.py:15-67): assemble
     the stats-API response for ``stats`` ∈ {queue, spider, machine,
-    crawler, kafka-monitor, redis-monitor, all}.
+    crawler, kafka-monitor, redis-monitor, rest, all}.
 
     Response shape per docs/topics/kafka-monitor/api.rst: counts are
     keyed by rolling window seconds (STATS_TIMES) + 'lifetime'; spider
     'count' / machines 'count' come from TTL'd heartbeat self-reports
-    (stats_monitor.py:169-202, :215-242), not from crawled rows."""
+    (stats_monitor.py:169-202, :215-242), not from crawled rows.
+
+    Each source table is aggregated ONCE and every part is derived from
+    that one result on the driver (Disco, EDBT 2020: one shared
+    aggregation, many views): ``all`` costs four collects — heartbeats,
+    frontier, crawled, metrics."""
     out: dict = {"stats": which}
-    crawl_ts = F.col("round") * F.lit(round_len)  # event time of a crawled row
-    live = (
-        live_heartbeats(heartbeats, now, heartbeat_ttl).collect()
-        if heartbeats is not None
-        else []
-    )
 
-    def queue_part():
-        from pyspark.sql import Window
-
-        per_spider = queue_stats_df(frontier).collect()
+    # ``crawler`` = spiders + machines + QUEUE (get_crawler_stats,
+    # stats_monitor.py:246-258 — round-3 verdict "What's missing #1")
+    if which in ("queue", "crawler", "all"):
         # cap the per-spider domain list (reference payload is unbounded
         # — a driver OOM at 10^7 domains); keep the top-backlog domains,
-        # the tail stays summarized in spider_backlog/num_domains
-        w = Window.partitionBy("spiderid").orderBy(F.desc("backlog"), F.asc("domain"))
-        per_domain = (
+        # the tail stays summarized in spider_backlog/num_domains (each
+        # spider keeps its rank-1 row, which carries them, at cap 0)
+        rank, whole = _ranked("spiderid", "backlog")
+        rows = (
             frontier.groupBy("spiderid", "domain")
             .agg(F.count("*").alias("backlog"))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= queue_domains_cap)
+            .select(
+                "*",
+                F.row_number().over(rank).alias("rk"),
+                F.sum("backlog").over(whole).alias("spider_backlog"),
+                F.count("domain").over(whole).alias("num_domains"),
+            )
+            .filter(F.col("rk") <= max(queue_domains_cap, 1))
             .collect()
         )
-        queues = {}
-        for r in per_spider:
-            listed = [
-                {"domain": d["domain"], "backlog": d["backlog"]}
-                for d in per_domain
-                if d["spiderid"] == r["spiderid"]
-            ]
-            entry = {
+        queues: dict = {}
+        for r in sorted(rows, key=lambda r: r["rk"]):  # backlog desc, domain asc
+            q = queues.setdefault(f"queue_{r['spiderid']}", {
                 "spider_backlog": r["spider_backlog"],
                 "num_domains": r["num_domains"],
-                "domains": listed,
-            }
-            if r["num_domains"] > len(listed):
-                entry["domains_truncated"] = r["num_domains"] - len(listed)
-            queues[f"queue_{r['spiderid']}"] = entry
-        queues["total_backlog"] = sum(r["spider_backlog"] for r in per_spider)
-        return queues
+                "domains": [],
+            })
+            if r["rk"] <= queue_domains_cap:
+                q["domains"].append({"domain": r["domain"], "backlog": r["backlog"]})
+        for q in queues.values():
+            if q["num_domains"] > len(q["domains"]):
+                q["domains_truncated"] = q["num_domains"] - len(q["domains"])
+        queues["total_backlog"] = sum(q["spider_backlog"] for q in queues.values())
+        out["queue"] = queues
 
-    def spider_part():
-        rows = _windowed_counts(
-            crawled.filter(F.col("status_code").isNotNull()),
-            crawl_ts, now, ["spiderid", "status_code"],
-        ).collect()
+    want_spider = which in ("spider", "crawler", "all")
+    want_machine = which in ("machine", "crawler", "all")
+    if want_spider or want_machine:
+        live = (
+            live_heartbeats(heartbeats, now, heartbeat_ttl).collect()
+            if heartbeats is not None
+            else []
+        )
         crawler_live = [h for h in live if h["component"] == "crawler"]
+        status_rows = _windowed_counts(
+            crawled.filter(F.col("status_code").isNotNull()),
+            F.col("round") * F.lit(round_len),  # event time of a crawled row
+            now, ["spiderid", "status_code"],
+        ).collect()
+    if want_spider:
         spiders: dict = {
             "unique_spider_count": len({h["spiderid"] for h in crawler_live}),
             "total_spider_count": len(crawler_live),
@@ -316,104 +331,56 @@ def build_stats_payload(frontier: DataFrame, crawled: DataFrame, metrics: DataFr
         for h in crawler_live:
             spiders.setdefault(h["spiderid"], {}).setdefault("count", 0)
             spiders[h["spiderid"]]["count"] += 1
-        for r in rows:
+        for r in status_rows:
             spiders.setdefault(r["spiderid"], {})[str(r["status_code"])] = _window_dict(r)
-        return spiders
-
-    def machine_part():
-        rows = _windowed_counts(
-            crawled.filter(F.col("status_code").isNotNull()),
-            crawl_ts, now, ["status_code"],
-        ).collect()
-        hosts = sorted({h["host"] for h in live if h["component"] == "crawler"}) or [
-            "localhost"
-        ]
+        out["spider"] = spiders
+    if want_machine:
+        # per-status totals = the spider rows summed over spiderid
+        # (lifetime and every window count are additive)
+        counters = ["lifetime"] + [f"w_{w}" for w in STATS_TIMES]
+        by_code: dict = {}
+        for r in status_rows:
+            acc = by_code.setdefault(r["status_code"], dict.fromkeys(counters, 0))
+            for k in counters:
+                acc[k] += r[k]
+        hosts = sorted({h["host"] for h in crawler_live}) or ["localhost"]
         # single egress identity: crawl totals attributed to the engine
         # host (first); other live hosts are listed for count parity
         machines: dict = {"count": len(hosts)}
-        machines[hosts[0]] = {str(r["status_code"]): _window_dict(r) for r in rows}
+        machines[hosts[0]] = {str(c): _window_dict(acc) for c, acc in by_code.items()}
         for extra in hosts[1:]:
             machines.setdefault(extra, {})
-        return machines
+        out["machine"] = machines
 
-    def monitor_part(component: str):
-        # Counts are VALUE-weighted: one metrics row records n handled
-        # items (feed paths batch), so window sums use sum(value) — the
-        # rolling-counter increment semantics of stats_collector.py.
-        def _value_windows(df, group_col):
-            aggs = [F.sum("value").cast("long").alias("lifetime")] + [
-                F.sum(
-                    F.when(F.col("ts") > F.lit(now) - F.lit(wn), F.col("value")).otherwise(0)
-                ).cast("long").alias(f"w_{wn}")
-                for wn in STATS_TIMES
-            ]
-            return df.groupBy(group_col).agg(*aggs).collect()
-
-        comp = metrics.filter(F.col("component") == component)
-        rows = _value_windows(comp.filter(F.col("plugin").isNull()), "kind")
-        # totals from the plugin-NULL rows only: plugin rows share
-        # kind='total', so an unfiltered sum double-counts every handled
-        # message (each feed writes a plugin-null total row AND a
-        # per-plugin row) and disagrees with the lifetime window in the
-        # same payload (round-3 advice #1)
-        totals = (
-            comp.filter(F.col("plugin").isNull())
-            .groupBy("kind").agg(F.sum("value").alias("total")).collect()
-        )
-        tmap = {r["kind"]: r["total"] for r in totals}
-        out = {
-            r["kind"]: dict(_window_dict(r), total_value=tmap.get(r["kind"]))
-            for r in rows
-        }
-        # per-plugin fan-out (kafka_monitor.py:189-221 — the reference
-        # keys ``stats:<component>:<PluginName>:<window>`` per handler
-        # plugin)
-        prows = _value_windows(comp.filter(F.col("plugin").isNotNull()), "plugin")
-        if prows:
-            out["plugins"] = {r["plugin"]: _window_dict(r) for r in prows}
-        return out
-
-    # ``crawler`` = spiders + machines + QUEUE (get_crawler_stats,
-    # stats_monitor.py:246-258 — round-3 verdict "What's missing #1")
-    if which in ("queue", "crawler", "all"):
-        out["queue"] = queue_part()
-    if which in ("spider", "crawler", "all"):
-        out["spider"] = spider_part()
-    if which in ("machine", "crawler", "all"):
-        out["machine"] = machine_part()
     # monitor payloads are the component's OWN metrics — possibly empty
     # ({}), never silently re-attributed from another component (the old
     # `or monitor_part("scheduler")` fallback, round-3 verdict
-    # "What's wrong #4"): feed/process paths write their rows under
-    # their own component label since round 3.
-    if which in ("kafka-monitor", "all"):
-        out["kafka-monitor"] = monitor_part("kafka-monitor")
-    if which in ("redis-monitor", "all"):
-        out["redis-monitor"] = monitor_part("redis-monitor")
-    # ``rest`` key parity (stats_monitor.py:49-50, :78): the engine has
-    # no REST process, so the section is its (empty) metrics dict.
-    if which in ("rest", "all"):
-        out["rest"] = monitor_part("rest")
+    # "What's wrong #4").  ``rest`` key parity (stats_monitor.py:49-50,
+    # :78): the engine has no REST process, so that section is its
+    # (empty) metrics dict.
+    monitors = [c for c in ("kafka-monitor", "redis-monitor", "rest") if which in (c, "all")]
+    if monitors:
+        # Counts are VALUE-weighted (feed paths batch n items per row).
+        # plugin-NULL rows key by kind and carry total_value; plugin rows
+        # share kind='total', so they key by plugin name instead (the
+        # per-plugin fan-out of kafka_monitor.py:189-221) and never
+        # reach a kind's totals.
+        rows = _windowed_counts(
+            metrics.filter(F.col("component").isin(monitors)),
+            F.col("ts"), now,
+            ["component", F.col("plugin").isNull().alias("by_kind"),
+             F.coalesce("plugin", "kind").alias("key")],
+            weight=F.col("value"),
+        ).collect()
+        for c in monitors:
+            out[c] = {}
+        for r in rows:
+            part = out[r["component"]]
+            if r["by_kind"]:
+                part[r["key"]] = dict(_window_dict(r), total_value=r["weight_sum"])
+            else:
+                part.setdefault("plugins", {})[r["key"]] = _window_dict(r)
     return out
-
-
-def queue_stats_df(frontier: DataFrame) -> DataFrame:
-    """StatsMonitor.get_queue_stats (:261-297): per spider backlog +
-    domain count; total backlog = frontier.count()."""
-    return frontier.groupBy("spiderid").agg(
-        F.count("*").alias("spider_backlog"),
-        F.countDistinct("domain").alias("num_domains"),
-    )
-
-
-def spider_stats_df(crawled: DataFrame) -> DataFrame:
-    """StatsMonitor.get_spider_stats (:162-209) analog: per (spiderid,
-    status_code) totals."""
-    return (
-        crawled.filter(F.col("status_code").isNotNull())
-        .groupBy("spiderid", "status_code")
-        .agg(F.count("*").alias("total"))
-    )
 
 
 def sessionize(

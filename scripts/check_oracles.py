@@ -2,13 +2,20 @@
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
 compare row count, column names, and an order-insensitive value hash.
 
+The side parquets some queries hand to their oracles are rebuilt in a
+fresh temporary directory on every run, so the check always exercises
+the code that builds them.
+
 Usage: python scripts/check_oracles.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 
@@ -41,6 +48,17 @@ def value_hash(rows: list[dict], cols: list[str]) -> str:
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: str = "") -> int:
     """``only``: comma-separated query names for a targeted re-check."""
+    side_dir = tempfile.mkdtemp(prefix="scs_side_")
+    entrymod._side_path = lambda kind, sf: os.path.join(
+        side_dir, f"scs_{kind}_v1_{os.path.basename(sf.rstrip('/')) or 'sf'}"
+    )
+    try:
+        return _check(sf_dir, only)
+    finally:
+        shutil.rmtree(side_dir, ignore_errors=True)
+
+
+def _check(sf_dir: str, only: str) -> int:
     spark = get_spark(app_name="oracle-check", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

@@ -100,6 +100,15 @@ def test_appid_info_domain_cap(store):
     full = build_appid_info(frontier, "link", "capapp", domains_cap=100)
     assert len(full["crawlids"]["c1"]["domains"]) == 12
     assert "domains_truncated" not in full["crawlids"]["c1"]
+    # cap 0 lists no domain, and every total survives it
+    bare = build_appid_info(frontier, "link", "capapp", domains_cap=0)
+    assert (bare["total_pending"], bare["total_domains"]) == (12, 12)
+    assert bare["crawlids"]["c1"]["domains"] == {}
+    assert bare["crawlids"]["c1"]["domains_truncated"] == 12
+    q = build_stats_payload(frontier, None, None, "queue", queue_domains_cap=0)["queue"]
+    assert q["queue_link"] == {"spider_backlog": 12, "num_domains": 12, "domains": [],
+                               "domains_truncated": 12}
+    assert q["total_backlog"] == 12
 
 
 def test_heartbeat_instance_dedup(spark):

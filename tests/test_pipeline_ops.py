@@ -233,6 +233,15 @@ class TestVectors:
         sizing dispatches to it (T·2^−planes ≥ the dispatch fraction)
         while a production threshold (0.9) keeps the LSH plan."""
         emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+        # plus a pair whose cosine is EXACTLY a rounding tie: 29/32 =
+        # 0.90625 must round half up (0.9063) like Spark's round
+        dim = len(emb.first().embedding)
+        tie = spark.createDataFrame(
+            [(10_000, [1.0] + [0.0] * (dim - 1), 0),
+             (10_001, [29.0, 13.0, 3.0, 2.0, 1.0] + [0.0] * (dim - 5), 0)],
+            emb.schema,
+        )
+        emb = emb.unionByName(tie)
         # force the legacy LSH plan by pinning the derived params
         planes, tables = V.derive_lsh_params(500, 0.45)
         legacy = {
@@ -246,6 +255,7 @@ class TestVectors:
             for r in V.neardup_pairs_blocked(emb, threshold=0.45).collect()
         }
         assert blocked == legacy and len(blocked) > 0
+        assert (10_000, 10_001, 0.9063) in blocked
         # multi-block tiling must not change the answer
         small_blocks = {
             (r.a, r.b, r.cos)

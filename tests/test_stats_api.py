@@ -10,15 +10,110 @@ from scrapy_cluster_spark.plans.crawl import feed_requests, run_crawl
 CFG = EngineConfig()
 
 
+# Full ack JSON of every stats/info request in test_stats_action_payload,
+# host name replaced by HOST: any change to how the payloads are
+# aggregated must leave these bytes unchanged.
+PINNED = {
+    "u-queue": (
+        '{"action": "stats", "appid": null, "crawlid": null, "payload": '
+        '{"queue": {"queue_link": {"domains": [{"backlog": 5, "domain": '
+        '"site0.com"}, {"backlog": 2, "domain": "site1.com"}], "num_domains": '
+        '2, "spider_backlog": 7}, "total_backlog": 7}, "stats": "queue"}, '
+        '"server_time": 0, "spiderid": null, "uuid": "u-queue"}'
+    ),
+    "u-info-app": (
+        '{"action": "info", "appid": "statapp", "crawlid": null, "payload": '
+        '{"appid": "statapp", "crawlids": {"sc": {"distinct_domains": 1, '
+        '"domains": {"site0.com": {"high_priority": 9, "low_priority": 5, '
+        '"total": 5}}, "total": 5}, "sc2": {"distinct_domains": 1, "domains": '
+        '{"site1.com": {"high_priority": 5, "low_priority": 5, "total": 2}}, '
+        '"total": 2}}, "spiderid": "link", "total_crawlids": 2, '
+        '"total_domains": 2, "total_pending": 7}, "server_time": 0, '
+        '"spiderid": "link", "uuid": "u-info-app"}'
+    ),
+    "u-info-crawl": (
+        '{"action": "info", "appid": "statapp", "crawlid": "sc", "payload": '
+        '{"appid": "statapp", "crawlid": "sc", "domains": {"site0.com": '
+        '{"high_priority": 9, "low_priority": 5, "total": 5}}, "expires": 0, '
+        '"spiderid": "link", "total_domains": 1, "total_pending": 5}, '
+        '"server_time": 0, "spiderid": "link", "uuid": "u-info-crawl"}'
+    ),
+    "u-stats": (
+        '{"action": "stats", "appid": null, "crawlid": null, "payload": '
+        '{"kafka-monitor": {"plugins": {"ActionHandler": {"21600": 2, "3600": '
+        '2, "43200": 2, "604800": 2, "86400": 2, "900": 2, "lifetime": 2}, '
+        '"ScraperHandler": {"21600": 7, "3600": 7, "43200": 7, "604800": 7, '
+        '"86400": 7, "900": 7, "lifetime": 7}, "StatsHandler": {"21600": 2, '
+        '"3600": 2, "43200": 2, "604800": 2, "86400": 2, "900": 2, '
+        '"lifetime": 2}}, "total": {"21600": 11, "3600": 11, "43200": 11, '
+        '"604800": 11, "86400": 11, "900": 11, "lifetime": 11, "total_value": '
+        '11.0}}, "machine": {"count": 1, "HOST": {"200": {"21600": 7, "3600": '
+        '7, "43200": 7, "604800": 7, "86400": 7, "900": 7, "lifetime": 7}}}, '
+        '"queue": {"total_backlog": 0}, "redis-monitor": {"plugins": '
+        '{"InfoMonitor": {"21600": 2, "3600": 2, "43200": 2, "604800": 2, '
+        '"86400": 2, "900": 2, "lifetime": 2}, "StatsMonitor": {"21600": 1, '
+        '"3600": 1, "43200": 1, "604800": 1, "86400": 1, "900": 1, '
+        '"lifetime": 1}}}, "rest": {}, "spider": {"link": {"200": {"21600": '
+        '7, "3600": 7, "43200": 7, "604800": 7, "86400": 7, "900": 7, '
+        '"lifetime": 7}, "count": 1}, "total_spider_count": 1, '
+        '"unique_spider_count": 1}, "stats": "all"}, "server_time": 120, '
+        '"spiderid": null, "uuid": "u-stats"}'
+    ),
+    "u-crawler": (
+        '{"action": "stats", "appid": null, "crawlid": null, "payload": '
+        '{"machine": {"count": 1, "HOST": {"200": {"21600": 7, "3600": 7, '
+        '"43200": 7, "604800": 7, "86400": 7, "900": 7, "lifetime": 7}}}, '
+        '"queue": {"total_backlog": 0}, "spider": {"link": {"200": {"21600": '
+        '7, "3600": 7, "43200": 7, "604800": 7, "86400": 7, "900": 7, '
+        '"lifetime": 7}, "count": 1}, "total_spider_count": 1, '
+        '"unique_spider_count": 1}, "stats": "crawler"}, "server_time": 120, '
+        '"spiderid": null, "uuid": "u-crawler"}'
+    ),
+    "u-stats-late": (
+        '{"action": "stats", "appid": null, "crawlid": null, "payload": '
+        '{"spider": {"link": {"200": {"21600": 7, "3600": 7, "43200": 7, '
+        '"604800": 7, "86400": 7, "900": 7, "lifetime": 7}}, '
+        '"total_spider_count": 0, "unique_spider_count": 0}, "stats": '
+        '"spider"}, "server_time": 600, "spiderid": null, "uuid": '
+        '"u-stats-late"}'
+    ),
+}
+
+
+def _pinned(ack: dict) -> str:
+    import socket
+
+    text = json.dumps(ack, sort_keys=True)
+    return text.replace(json.dumps(socket.gethostname()), '"HOST"')
+
+
 def test_stats_action_payload(store, pages):
     feed_requests(
         store,
         [{"appid": "statapp", "crawlid": "sc", "url": f"http://site0.com/page/{j}",
-          "priority": 5, "maxdepth": 0} for j in range(4)]
-        + [{"appid": "statapp", "crawlid": "sc2", "url": "http://site1.com/page/0",
-            "priority": 5, "maxdepth": 0}],
+          "priority": 5 + j, "maxdepth": 0} for j in range(5)]
+        + [{"appid": "statapp", "crawlid": "sc2", "url": f"http://site1.com/page/{j}",
+            "priority": 5, "maxdepth": 0} for j in range(2)],
         CFG,
     )
+    # --- before the crawl: queue stats and info rollups over the full
+    # frontier (StatsMonitor.get_queue_stats :261-297, InfoMonitor
+    # :81-202)
+    feed_action(store, {"action": "stats", "uuid": "u-queue", "stats": "queue"})
+    feed_action(store, {"action": "info", "uuid": "u-info-app", "spiderid": "link",
+                        "appid": "statapp"})
+    feed_action(store, {"action": "info", "uuid": "u-info-crawl", "spiderid": "link",
+                        "appid": "statapp", "crawlid": "sc"})
+    process_actions(store, round_id=0)
+    ack = poll_outbound(store, "u-queue")
+    assert _pinned(ack) == PINNED["u-queue"]
+    q = ack["payload"]["queue"]
+    assert q["queue_link"]["spider_backlog"] == 7
+    assert q["queue_link"]["num_domains"] == 2
+    assert q["total_backlog"] == 7
+    for uuid in ("u-info-app", "u-info-crawl"):
+        assert _pinned(poll_outbound(store, uuid)) == PINNED[uuid]
+
     run_crawl(store, pages, CFG, max_rounds=2)
     feed_action(store, {"action": "stats", "uuid": "u-stats", "stats": "all"})
     # round 2 → now=120 s: the round-1 crawler heartbeat (ts=60, the
@@ -27,15 +122,16 @@ def test_stats_action_payload(store, pages):
 
     ack = poll_outbound(store, "u-stats")
     assert ack is not None and ack["action"] == "stats"
+    assert _pinned(ack) == PINNED["u-stats"]
     p = ack["payload"]
     assert p["stats"] == "all"
     # queue stats reflect the (drained) frontier; spider stats the crawl
     assert "total_backlog" in p["queue"]
     # window-keyed response (api.rst:324): rolling windows + lifetime
     s200 = p["spider"]["link"]["200"]
-    assert s200["lifetime"] == 5
-    assert s200["900"] == 5  # crawl events (t=60) inside 15 min of now=120
-    assert s200["604800"] == 5
+    assert s200["lifetime"] == 7
+    assert s200["900"] == 7  # crawl events (t=60) inside 15 min of now=120
+    assert s200["604800"] == 7
     # heartbeat-derived live counts (stats_monitor.py:169-202)
     assert p["spider"]["unique_spider_count"] == 1
     assert p["spider"]["total_spider_count"] == 1
@@ -44,7 +140,7 @@ def test_stats_action_payload(store, pages):
 
     host = socket.gethostname()
     assert p["machine"]["count"] == 1
-    assert p["machine"][host]["200"]["lifetime"] == 5
+    assert p["machine"][host]["200"]["lifetime"] == 7
     assert "kafka-monitor" in p and "redis-monitor" in p
     # 'all' carries the rest section too (get_all_stats,
     # stats_monitor.py:78); no REST process runs in-engine, so its
@@ -53,15 +149,16 @@ def test_stats_action_payload(store, pages):
     # kafka-monitor total_value equals its lifetime window: totals come
     # from plugin-null rows only (plugin rows share kind='total' and
     # would double-count every handled message)
-    km_total = p["kafka-monitor"].get("total", {})
-    if km_total:
-        assert km_total["total_value"] == km_total["lifetime"]
+    km_total = p["kafka-monitor"]["total"]
+    assert km_total["total_value"] == km_total["lifetime"]
 
     # --- stats: crawler = spiders + machines + QUEUE
     # (get_crawler_stats, stats_monitor.py:246-258)
     feed_action(store, {"action": "stats", "uuid": "u-crawler", "stats": "crawler"})
     process_actions(store, round_id=2)
-    pc = poll_outbound(store, "u-crawler")["payload"]
+    ack = poll_outbound(store, "u-crawler")
+    assert _pinned(ack) == PINNED["u-crawler"]
+    pc = ack["payload"]
     assert set(pc) == {"stats", "queue", "spider", "machine"}
     assert "total_backlog" in pc["queue"]
 
@@ -70,11 +167,58 @@ def test_stats_action_payload(store, pages):
     # key-expiry analog, distributed_scheduler.py:319-320)
     feed_action(store, {"action": "stats", "uuid": "u-stats-late", "stats": "spider"})
     process_actions(store, round_id=10)  # now=600: ts=60 is stale (TTL 120)
-    p2 = poll_outbound(store, "u-stats-late")["payload"]
+    ack = poll_outbound(store, "u-stats-late")
+    assert _pinned(ack) == PINNED["u-stats-late"]
+    p2 = ack["payload"]
     assert p2["spider"]["total_spider_count"] == 0
     assert "count" not in p2["spider"].get("link", {})
     # lifetime survives; the 900 s window (600-900<60) still covers t=60
-    assert p2["spider"]["link"]["200"]["lifetime"] == 5
+    assert p2["spider"]["link"]["200"]["lifetime"] == 7
+
+
+def test_stats_and_info_collect_counts(spark, monkeypatch):
+    """Each source table is aggregated once per request: a ``stats:
+    all`` payload collects at most once per table (heartbeats, frontier,
+    crawled, metrics) and an appid info payload exactly once."""
+    from scrapy_cluster_spark.operators.stats import build_appid_info, build_stats_payload
+    from scrapy_cluster_spark.schemas import FRONTIER_SCHEMA, HEARTBEATS_SCHEMA, METRICS_SCHEMA
+
+    frontier = spark.createDataFrame(
+        [{"spiderid": "link", "appid": "capp", "crawlid": "c1", "domain": f"d{i % 3}.com",
+          "url": f"http://d{i % 3}.com/{i}", "priority": i} for i in range(6)],
+        FRONTIER_SCHEMA,
+    )
+    crawled = spark.createDataFrame(
+        [(200, "link", 1), (404, "link", 1)], "status_code int, spiderid string, round long"
+    )
+    metrics = spark.createDataFrame(
+        [{"component": c, "kind": "total", "plugin": p, "value": 1.0, "ts": 60.0}
+         for c in ("kafka-monitor", "redis-monitor") for p in (None, "Plugin")],
+        METRICS_SCHEMA,
+    )
+    heartbeats = spark.createDataFrame(
+        [("crawler", "h1", "engine-link", "link", 60.0)], HEARTBEATS_SCHEMA
+    )
+    cls = type(frontier)  # the concrete DataFrame class behind the API
+    calls = []
+    real_collect = cls.collect
+
+    def counting_collect(self):
+        calls.append(1)
+        return real_collect(self)
+
+    monkeypatch.setattr(cls, "collect", counting_collect)
+    p = build_stats_payload(frontier, crawled, metrics, "all", now=60.0, heartbeats=heartbeats)
+    n_stats = len(calls)
+    calls.clear()
+    info = build_appid_info(frontier, "link", "capp")
+    n_info = len(calls)
+    monkeypatch.undo()
+
+    assert p["queue"]["queue_link"]["spider_backlog"] == 6
+    assert info["total_pending"] == 6 and info["total_domains"] == 3
+    assert n_stats <= 4, f"stats: all took {n_stats} collects"
+    assert n_info == 1, f"appid info took {n_info} collects"
 
 
 def test_poll_unknown_uuid(store):
